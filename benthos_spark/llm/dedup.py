@@ -265,18 +265,24 @@ def minhash_lsh_pairs(df: DataFrame, text: str = "text",
     if hot_cap is not None:
         sz = F.when(
             F.size("__ids") > int(hot_cap),
-            F.raise_error(F.lit(
-                f"minhash_lsh_pairs: a bucket exceeds "
-                f"hot_cap={int(hot_cap)} members; its pair output is "
-                "quadratic in bucket size. Use "
-                "minhash_lsh_star_edges (linear output, identical "
-                "connectivity) for clustering, or pass a larger/None "
-                "hot_cap.")).cast("int")).otherwise(F.size("__ids"))
-    x = lists.select("__ids",
+            F.raise_error(F.concat(
+                F.lit("minhash_lsh_pairs: bucket band="),
+                F.col("band").cast("string"),
+                F.lit(" band_key="), F.col("band_key"),
+                F.lit(" has "), F.size("__ids").cast("string"),
+                F.lit(f" members, over hot_cap={int(hot_cap)}; its "
+                      "pair output is quadratic in bucket size. Use "
+                      "minhash_lsh_star_edges (linear output, identical "
+                      "connectivity) for clustering, or pass a "
+                      "larger/None hot_cap."))).cast("int")).otherwise(
+                          F.size("__ids"))
+    # the cap is checked once per bucket, where its band key is in scope
+    x = lists.select("__ids", sz.alias("__n"),
                      F.posexplode("__ids").alias("__i", "id_a"))
     return (x.select(
         "id_a",
-        F.explode(F.slice(F.col("__ids"), F.col("__i") + 2, sz))
+        F.explode(F.slice(F.col("__ids"), F.col("__i") + 2,
+                          F.col("__n")))
         .alias("id_b"))
         .distinct())
 

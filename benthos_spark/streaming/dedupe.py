@@ -52,15 +52,29 @@ enforced by a last-touch sweep on every shard call; a fully idle shard
 is reclaimed by the state-level processing-time timeout (every bucket
 in it is then ≥ TTL idle by definition).
 
-Sizing `shards` at 100 TB: each state update rewrites the touched
-shard's whole map value, so pick shards ≈ live_buckets / 10_000 to
-keep map blobs ~100 KB — write amplification stays bounded while
-Python calls stay ~shards per batch.  The default (1024) fits fixture
-scale through sf3.  Production drains should also run the RocksDB
-state-store provider (`rocksdb_state_conf()`): the default HDFS-backed
-provider keeps EVERY key in executor memory, which is its own 100 TB
-cliff — RocksDB spills to local disk and snapshots incrementally.
-Equivalence under both providers is gated by
+Sizing `shards`: each state update rewrites the touched shard's whole
+map value, so pick shards ≈ live_buckets / 10_000 to keep map blobs
+~100 KB — write amplification stays bounded while Python calls stay
+~shards per batch.  A bounded replay (`replay_minhash_dedupe`) knows
+its live-bucket bound before it starts — bands × corpus rows, read
+from the parquet footers (a directory sums its part files) — and
+applies exactly that rule: shards = ceil(bands·rows / 10_000), at
+least 1, and state partitions = min(shards, defaultParallelism).
+There is no floor, because every state partition is one Python task
+per micro-batch and a Python task has a fixed cost whether or not it
+reads a row: 0.3–0.6 s each on a 4-core host (PySpark 4.1, Python
+3.11).  A profile of a reused worker puts all of it in
+`setup_spark_files` → `importlib.invalidate_caches()`, which re-reads
+the central directory of `pyspark.zip` once per zipimporter (~16) on
+every task.  The engine cannot change the Spark install, only how
+many Python tasks it launches: a 500-row corpus drains as one shard
+in one task, where 16 state partitions would run 16 tasks — 4 waves
+on 4 cores, most reading no rows.  Unbounded streams keep the default 1024 shards,
+which fits fixture scale through sf3.  Production drains should also
+run the RocksDB state-store provider (`rocksdb_state_conf()`): the
+default HDFS-backed provider keeps EVERY key in executor memory, which
+is its own 100 TB cliff — RocksDB spills to local disk and snapshots
+incrementally.  Equivalence under both providers is gated by
 tests/test_streaming_dedupe.py::test_rocksdb_state_store_provider.
 """
 
@@ -72,6 +86,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
                     "RocksDBStateStoreProvider")
+
+# Live (band, band_key) buckets per shard map: ~100 KB blobs (module
+# docstring, "Sizing `shards`").
+BUCKETS_PER_SHARD = 10_000
 
 
 def rocksdb_state_conf() -> dict[str, str]:
@@ -186,6 +204,43 @@ def streaming_minhash_dup_marks(stream: DataFrame, text: str = "text",
                 outputMode="append", timeoutConf=timeout))
 
 
+def corpus_rows(spark, path: str) -> int:
+    """Rows of a parquet corpus from its footers.  A local file or
+    directory is read with pyarrow, so sizing a drain launches no
+    Spark job; a directory sums its files, skipping entries that start
+    with `_` or `.` as Spark's file source does.  Any other path (a
+    remote URI, a glob) is counted by Spark, which reads only the
+    footers' row counts."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    if os.path.isfile(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    if not os.path.isdir(path):
+        return spark.read.parquet(path).count()
+    rows = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rows += sum(pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+                    for f in files if not f.startswith(("_", ".")))
+    return rows
+
+
+def drain_sizing(spark, path: str, bands: int) -> tuple[int, int]:
+    """(shards, state partitions) for a bounded drain of `path`:
+    shards = ceil(bands·rows / BUCKETS_PER_SHARD), at least 1, and
+    one state partition per shard up to the session's
+    defaultParallelism.  Each state partition is one Python task per
+    micro-batch with a fixed cost (module docstring), so a small
+    corpus gets one; past the core count more partitions only queue
+    (at 50k documents, 20 partitions drained slower than 4 on 4
+    cores)."""
+    shards = max(1, -(-bands * corpus_rows(spark, path)
+                      // BUCKETS_PER_SHARD))
+    return shards, min(shards, spark.sparkContext.defaultParallelism)
+
+
 def replay_minhash_dedupe(spark, path: str, text: str = "text",
                           id_col: str = "doc_id", n: int = 3,
                           bands: int = 4,
@@ -194,7 +249,7 @@ def replay_minhash_dedupe(spark, path: str, text: str = "text",
     the distinct duplicate ids — the stream==batch gate surface (equal
     to the batch star-edge `id_b` set for a fully drained stream).
     Uses the streaming_replay machinery (AvailableNow, memory sink,
-    pinned state partitioning).
+    pinned state partitioning), sized by `drain_sizing`.
 
     rocksdb: True runs the drain under the RocksDB state-store
     provider (`rocksdb_state_conf()`) — the documented production
@@ -211,35 +266,15 @@ def replay_minhash_dedupe(spark, path: str, text: str = "text",
         rocksdb = os.environ.get("BENTHOS_SPARK_ROCKSDB_STATE",
                                  "").lower() in ("1", "true", "yes")
 
-    # A bounded replay knows its corpus size from the parquet footer
-    # (metadata only, no job), so size `shards` by the module
-    # docstring's live-bucket rule instead of the unbounded-stream
-    # default: shards ≈ bands·n_docs / 10k keeps Python group calls
-    # per micro-batch proportional to corpus, with a floor of 16 so
-    # small drains still spread across the state partitions.  Output
-    # is shard-count independent (sharding only groups buckets);
-    # r10 measured the fixture drain at 2.6 s vs 3.4 s under the
-    # fixed 1024 (463 identical rows at every setting tried).
-    try:
-        import pyarrow.parquet as _pq
-        n_docs = _pq.ParquetFile(path).metadata.num_rows
-        shards = max(16, min(1 << 20, (bands * n_docs) // 10_000))
-    except Exception:
-        # directory corpus / unreadable footer: keep the unbounded-
-        # stream default rather than guessing small
-        shards = 1024
-
-    # 16 state partitions: the sharded operator makes ≤`shards` group
-    # calls per micro-batch with vectorized pandas inside, so a
-    # handful of workers suffice — 16 keeps the shard calls spread
-    # across cores without paying 32 state-store instances
+    # sharding only groups buckets, so the marks do not depend on size
+    shards, partitions = drain_sizing(spark, path, bands)
     marks = replay_parquet(
         spark, path,
         lambda s: streaming_minhash_dup_marks(s, text=text,
                                               id_col=id_col, n=n,
                                               bands=bands,
                                               shards=shards),
-        output_mode="append", shuffle_partitions=16,
+        output_mode="append", shuffle_partitions=partitions,
         extra_conf=rocksdb_state_conf() if rocksdb else None)
     return (marks.select(F.col(id_col).alias("dup_doc_id"))
             .distinct())

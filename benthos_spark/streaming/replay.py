@@ -84,6 +84,16 @@ def _start_replay(spark: SparkSession, path: str,
     return q, name, dirs
 
 
+def _stop_and_clean(started: list, tmp_root: str) -> None:
+    """Stop every started drain and remove its dirs and the temp root."""
+    for q, _name, dirs in started:
+        if q.isActive:
+            q.stop()
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+    shutil.rmtree(tmp_root, ignore_errors=True)
+
+
 def replay_parquet_many(spark: SparkSession,
                         specs: list[tuple],
                         await_secs: int = 600,
@@ -150,14 +160,25 @@ def replay_parquet_many(spark: SparkSession,
                                      tmp_root=tmp_root)
 
             with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-                started = list(pool.map(
-                    inheritable_thread_target(_start_one), specs))
+                futures = [pool.submit(
+                    inheritable_thread_target(_start_one), spec)
+                    for spec in specs]
+            # keep the drains that did start: a failed sibling start
+            # must still stop and clean them up
+            started = [f.result() for f in futures
+                       if f.exception() is None]
+            for f in futures:
+                if f.exception() is not None:
+                    raise f.exception()
         else:
             path, transform, output_mode = specs[0]
             started.append(_start_replay(spark, path, transform,
                                          output_mode,
                                          schema=schemas[path],
                                          tmp_root=tmp_root))
+    except BaseException:
+        _stop_and_clean(started, tmp_root)
+        raise
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -175,12 +196,7 @@ def replay_parquet_many(spark: SparkSession,
                     f"replay did not drain in {await_secs}s")
             tables.append(spark.table(name))
     finally:
-        for q, _name, dirs in started:
-            if q.isActive:
-                q.stop()
-            for d in dirs:
-                shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        _stop_and_clean(started, tmp_root)
     return tables
 
 

@@ -103,10 +103,10 @@ def test_langid_classifier_lone_surrogate():
 
 
 def test_minhash_hot_cap_raises_with_pointer(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.sql.utils import PythonException
-
-    from benthos_spark.llm.dedup import minhash_lsh_pairs
+    from benthos_spark.llm.dedup import (MINHASH_PERMS,
+                                         _banded_signatures_arrow,
+                                         minhash_lsh_pairs,
+                                         shingle_hash_frame)
 
     # one mega-bucket: identical text → identical signatures
     docs = spark.createDataFrame(
@@ -114,7 +114,14 @@ def test_minhash_hot_cap_raises_with_pointer(spark):
          for i in range(50)], "doc_id long, text string")
     with pytest.raises(Exception) as ei:
         minhash_lsh_pairs(docs, hot_cap=10).collect()
-    assert "star_edges" in str(ei.value)
+    msg = str(ei.value)
+    assert "star_edges" in msg and "has 50 members" in msg
+    # the error names the offending bucket: one of the doc's band keys
+    keys = {(r["band"], r["band_key"]) for r in _banded_signatures_arrow(
+        shingle_hash_frame(docs, "text", "doc_id", 3), "doc_id", 4,
+        len(MINHASH_PERMS) // 4).collect()}
+    assert len(keys) == 4
+    assert any(f"band={b} band_key={k} " in msg for b, k in keys), msg
     # under the cap: same pair set as uncapped
     a = {tuple(r) for r in
          minhash_lsh_pairs(docs, hot_cap=64).collect()}

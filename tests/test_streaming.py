@@ -138,3 +138,39 @@ def test_replay_parquet_equals_batch(spark):
         assert single.count() >= 1
     finally:
         shutil.rmtree(src, ignore_errors=True)
+
+
+def test_replay_partial_start_cleans_up(spark, tmp_path, monkeypatch):
+    """When one drain of a concurrent start raises, the drains that did
+    start are stopped and their checkpoint/source dirs and the shared
+    temp root are removed before the error propagates."""
+    import time
+
+    import pytest
+
+    from benthos_spark.streaming import replay_parquet_many
+
+    root = tmp_path / "replay_tmp"
+    root.mkdir()
+    monkeypatch.setenv("SPARK_GRAFT_REPLAY_TMP", str(root))
+    src = str(tmp_path / "events")
+    _events(spark).coalesce(1).write.parquet(src)
+
+    def slow(s):
+        # keeps a started sibling draining while the failing start
+        # propagates, so only an explicit stop ends it
+        def sleep_rows(batches):
+            for pdf in batches:
+                time.sleep(60)
+                yield pdf
+        return s.mapInPandas(sleep_rows, s.schema)
+
+    def boom(s):
+        raise ValueError("transform failed at start")
+
+    with pytest.raises(ValueError, match="transform failed at start"):
+        replay_parquet_many(spark, [(src, slow, "append"),
+                                    (src, boom, "append"),
+                                    (src, slow, "append")])
+    assert spark.streams.active == []
+    assert list(root.iterdir()) == []

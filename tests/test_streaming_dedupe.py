@@ -32,7 +32,7 @@ def _batch_dup_set(spark, docs_df):
 
 
 def _drain_marks(spark, src_dir, max_files=1, await_secs=300,
-                 provider=None):
+                 provider=None, shards=1024):
     """Drain src_dir with maxFilesPerTrigger=max_files; returns
     (distinct dup ids, number of micro-batches).  `provider` overrides
     the state-store provider class for this drain (latches at query
@@ -42,7 +42,7 @@ def _drain_marks(spark, src_dir, max_files=1, await_secs=300,
     schema = spark.read.parquet(src_dir).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files).parquet(src_dir))
-    marks = streaming_minhash_dup_marks(stream)
+    marks = streaming_minhash_dup_marks(stream, shards=shards)
     name = "sdedupe_" + uuid.uuid4().hex[:10]
     ckpt = tempfile.mkdtemp(prefix="sdedupe_ckpt_")
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
@@ -113,6 +113,99 @@ def test_shuffled_arrival_matches_batch(spark, tmp_path):
     assert n_batches >= 4
     batch = _batch_dup_set(spark, spark.read.parquet(src))
     assert dups == batch and batch
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
+@pytest.mark.parametrize("order", ["asc", "desc"])
+def test_marks_independent_of_shard_count(spark, tmp_path, order):
+    """Sharding only groups buckets, so the drained mark set is the
+    same at every shard count — what lets drain_sizing pick the count
+    from the corpus size.  Checked on the id-ordered and the shuffled
+    (high ids first) arrival."""
+    src = str(tmp_path / order)
+    _split_parquet(f"{SF_DIR}/documents.parquet", src, 4, order)
+    batch = _batch_dup_set(spark, spark.read.parquet(src))
+    assert batch
+    for shards in (1, 2, 16, 1024):
+        dups, n_batches = _drain_marks(spark, src, max_files=1,
+                                       shards=shards)
+        assert n_batches >= 4
+        assert dups == batch, shards
+
+
+def test_drain_sizing_rule(spark, tmp_path):
+    """shards = ceil(bands·rows / 10_000), at least 1; state partitions
+    = min(shards, defaultParallelism).  A path that is not a local
+    file or directory (here a file:// URI) is counted by Spark and
+    sized the same."""
+    import pyarrow as pa
+
+    from benthos_spark.streaming.dedupe import drain_sizing
+
+    par = spark.sparkContext.defaultParallelism
+    for rows, shards in ((0, 1), (2500, 1), (2501, 2), (100_000, 40)):
+        path = str(tmp_path / f"docs{rows}.parquet")
+        pq.write_table(pa.table({"doc_id": pa.array(range(rows),
+                                                    pa.int64())}), path)
+        assert drain_sizing(spark, path, 4) == \
+            (shards, min(shards, par)), rows
+    assert drain_sizing(spark, "file://" + path, 4) == (40, min(40, par))
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
+def test_directory_corpus_sized_like_single_file(spark, tmp_path):
+    """A directory corpus sums its part files' footers (hidden files
+    skipped, as the file source skips them), so the same rows split
+    across 3 files get the same shard/partition counts and the same
+    marks as the single file."""
+    from benthos_spark.streaming.dedupe import (corpus_rows, drain_sizing,
+                                                replay_minhash_dedupe)
+
+    src = f"{SF_DIR}/documents.parquet"
+    parts = str(tmp_path / "parts")
+    _split_parquet(src, parts, 3)
+    shutil.copy(src, os.path.join(parts, "_ignored.parquet"))
+    assert corpus_rows(spark, parts) == corpus_rows(spark, src) \
+        == spark.read.parquet(parts).count()
+    assert drain_sizing(spark, parts, 4) == drain_sizing(spark, src, 4)
+    from_dir = {r["dup_doc_id"] for r in
+                replay_minhash_dedupe(spark, parts).collect()}
+    from_file = {r["dup_doc_id"] for r in
+                 replay_minhash_dedupe(spark, src).collect()}
+    assert from_dir == from_file and from_file
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="no testdata")
+def test_small_corpus_drains_in_one_state_task(spark):
+    """A 500-row corpus is one shard, so the drain's stateful stage runs
+    exactly one Python task instead of several that would mostly read
+    no rows.  Counted from the status tracker: the drain's
+    jobs lie between two marker jobs, and a micro-batch job's result
+    stage (its highest stage id) is the stateful one."""
+    from benthos_spark.streaming.dedupe import (corpus_rows,
+                                                replay_minhash_dedupe)
+
+    src = f"{SF_DIR}/documents.parquet"
+    assert corpus_rows(spark, src) <= 2500
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def marker_job():
+        sc.setJobGroup("drain_marker", "bounds the drain's job ids")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setJobGroup(None, None)
+        return max(st.getJobIdsForGroup("drain_marker"))
+
+    first = marker_job()
+    replay_minhash_dedupe(spark, src)
+    last = marker_job()
+    jobs = [st.getJobInfo(j) for j in range(first + 1, last)]
+    assert all(jobs)
+    state_tasks = [st.getStageInfo(max(j.stageIds)).numTasks
+                   for j in jobs if len(j.stageIds) > 1]
+    assert state_tasks == [1]
 
 
 def test_ttl_expires_idle_bucket_state(spark, tmp_path):
