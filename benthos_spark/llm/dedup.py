@@ -124,12 +124,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     )).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Distinct portable hashes of the document's n-word shingles."""
-    return F.array_distinct(
-        F.transform(word_shingles(text, n), hash48))
-
-
 def signature_from_hashes(sh: Column,
                           perms: list[tuple[int, int]] = MINHASH_PERMS) -> Column:
     """MinHash signature over a (materialized) shingle-hash array: per
@@ -140,13 +134,6 @@ def signature_from_hashes(sh: Column,
             sh, lambda h: (h * a + b) % HASH_PRIME))
 
     return F.array(*[perm_min(a, b) for a, b in perms])
-
-
-def minhash_signature(text: Column, n: int = 3,
-                      perms: list[tuple[int, int]] = MINHASH_PERMS) -> Column:
-    """MinHash signature straight from text (convenience form; for bulk
-    use materialize shingle_hashes first — see minhash_lsh_pairs)."""
-    return signature_from_hashes(shingle_hashes(text, n), perms)
 
 
 def _banded_signatures_arrow(hashed: DataFrame, id_col: str,
@@ -670,243 +657,99 @@ def embedding_near_dup_pairs(df: DataFrame, vec: str = "embedding",
     return pairs.distinct()
 
 
-def connected_components_two_phase(edges: DataFrame, src: str = "id_a",
-                                   dst: str = "id_b",
-                                   max_iter: int = 40) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round fallback `connected_components`
-    documents for ADVERSARIAL graphs (long chains, high diameter),
-    where min-label propagation would need diameter rounds.
-
-    large-star: every node u links its larger neighbors to
-    m = min(N(u) ∪ {u}).  small-star: orient edges large→small, then
-    link all smaller neighbors (and u) to the minimum.  Alternating
-    the two converges to min-rooted stars in O(log n) rounds; each
-    round is one groupBy + one join on the node id, same shuffle
-    shape as a label-prop round, with localCheckpoint lineage
-    truncation.  Convergence = stable distinct-edge count + xxhash
-    sum (two O(1)-result aggregates).
-
-    Returns (doc_id, component), component = min node id — identical
-    contract to connected_components.
-    """
-    from pyspark.sql import Observation
-
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v")))
-    nodes = (e.select(F.col("u").alias("n"))
-             .union(e.select(F.col("v").alias("n"))).distinct()
-             .localCheckpoint(eager=True))
-    e = e.distinct().localCheckpoint(eager=True)
-    prev_sig = None
-    for _ in range(max_iter):
-        # ---- large-star ----
-        sym = e.union(e.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
-        m = (sym.groupBy("u")
-             .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-        e = (sym.join(m, "u")
-             .filter(F.col("v") > F.col("u"))
-             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-             .filter(F.col("u") != F.col("v"))
-             .distinct().localCheckpoint(eager=True))
-        # ---- small-star ----
-        oriented = e.select(F.greatest("u", "v").alias("u"),
-                            F.least("u", "v").alias("v"))
-        m = oriented.groupBy("u").agg(F.min("v").alias("m"))
-        nbrs = oriented.join(m, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v"))
-        selfs = m.select(F.col("u"), F.col("m").alias("v"))
-        obs = Observation()  # convergence rides the checkpoint job (r6)
-        e = (nbrs.union(selfs)
-             .filter(F.col("u") != F.col("v"))
-             .distinct()
-             .observe(obs, F.count(F.lit(1)).alias("n"),
-                      F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
-                      .alias("h"))
-             .localCheckpoint(eager=True))
-        sig = obs.get
-        if (sig["n"], sig["h"]) == prev_sig:
-            break
-        prev_sig = (sig["n"], sig["h"])
-    # stars: e = (child, root); roots/isolated nodes map to themselves
-    return (nodes.join(e, nodes.n == e.u, "left")
-            .select(F.col("n").alias("doc_id"),
-                    F.coalesce(F.col("v"), F.col("n"))
-                    .alias("component")))
-
-
 def connected_components(edges: DataFrame, src: str = "id_a",
                          dst: str = "id_b",
-                         max_iter: int = 50,
-                         escalate_after: int = 20) -> DataFrame:
+                         max_iter: int = 50) -> DataFrame:
     """Collapse near-dup candidate pairs into duplicate CLUSTERS:
     (node, component) where component = min node id reachable through
     the pair graph.  The canonical doc to keep per cluster is the
     component id itself.
 
-    Min-label propagation WITH per-round path compression (hash-to-min
-    family): every round each node takes the minimum label over its
-    closed neighborhood, then labels compress one hop — lab ← lab(lab)
-    — so label information travels geometrically, not one hop per
-    round.  Plain propagation needs diameter rounds, and near-dup
-    graphs are NOT always shallow: the r6 open-vocabulary fixtures
-    chain buckets into diameter-27 components (28 rounds, 11.1 s at
-    sf1); with compression the same graph converges in 16 rounds /
-    7.7 s with bit-identical labels.  Compression preserves the
-    invariants (labels stay within the component and only decrease),
-    and each round stays ONE checkpointed two-join plan — compressing
-    twice per round without a checkpoint in between doubles the plan
-    depth per round and stalls Catalyst (measured: round 11 planned
-    for 117 s).  Swap in connected_components_two_phase (below) for
-    truly adversarial inputs (e.g. a single path of millions of
-    nodes), where the O(log n) alternating-star rounds win.
+    Min-label rounds from the Shiloach-Vishkin family (FastSV, Zhang,
+    Azad & Hu 2020).  Every node u carries a label lab(u), its parent:
+    a node of its own component, never above u.  Every round has the
+    same shape, over each directed edge (u, v):
+
+      shortcut   read v's label two hops up, g(v) = lab(lab(v));
+      propagate  u takes the minimum over lab(u) and every g(v);
+      hook       every g(v) is also sent to u's parent lab(u).
+
+    Three joins of the checkpointed edges and labels feed one
+    groupBy(key).min over the rows (u, g(v)), (lab(u), g(v)) and
+    (u, lab(u)).  Reading g(v) in the join chain applies the shortcut
+    without a self-join of the round's own aggregate, which would
+    compute the round twice.  Hooking moves whole trees under smaller
+    roots and shortcutting halves their depth, so even a path whose
+    ids are in random order resolves in O(log n) rounds (measured: 8,
+    13, 16 and 19 rounds at 120, 2 000, 20 000 and 100 000 nodes),
+    where min-label propagation needs up to diameter rounds.  Labels stay within their component and only decrease, so
+    the fixpoint is the min reachable id.  The first round is the same
+    rule with lab = id, which needs no join.  A node whose only edge
+    is a self-loop keeps itself as component.
 
     Scale notes: labels only ever decrease, so convergence is detected
-    by comparing sum(label) between rounds — an O(1)-result aggregate
-    that rides the round's eager-checkpoint job as an `observe` metric
-    (r6: the separate `.agg().first()` convergence job doubled the
-    per-round job count; Observation populates from the localCheckpoint
-    materialization, so each round is now ONE job).  localCheckpoint
-    truncates lineage each round so the plan stays O(1) deep (iterative
-    DataFrame plans otherwise double in size per round and stall
-    Catalyst).
+    by comparing sum(label) between rounds, an O(1)-result aggregate
+    that rides the round's eager-checkpoint job as an `observe` metric:
+    one job per round.  localCheckpoint truncates lineage each round so
+    the plan stays O(1) deep, but it keeps the checkpointed plan's size
+    estimate, and the optimizer estimates a join's size as the product
+    of its inputs' sizes, so an iterative join loop roughly squares the
+    estimate every round (bit lengths 508, 1140, 2403, 4930, 9983 over
+    five rounds) until planning stalls in BigInteger arithmetic.  Once
+    the carried estimate passes 2^63 bytes the labels are re-wrapped
+    without it (Spark's unknown-size default): above that size every
+    planning decision already treats the input as too big to
+    broadcast, so no plan changes.
 
-    AUTO-ESCALATION (r7): a graph still moving at round
-    `escalate_after` has real depth — compression handles diameter-27
-    fixtures in 16 rounds, so only adversarial shapes (million-node
-    paths) get here — and the remaining work switches itself to the
-    O(log n) alternating-star rounds: contract every node to its
-    current label (labels are within-component by invariant, so the
-    contracted graph has identical component structure and is SMALLER
-    by everything already collapsed), run
-    connected_components_two_phase on the contracted edges, then map
-    each node through its contraction label to the final component.
-    No caller ever has to pick the two-phase variant manually, and the
-    result stays bit-identical (component = min reachable node id).
-    If the loop falls off max_iter without reaching the sum fixpoint
-    (only possible when escalate_after ≥ max_iter), the labels may be
-    WRONG (upper bounds, not components) — warn loudly.
+    If the loop falls off max_iter without reaching the sum fixpoint,
+    the labels are upper bounds, not components: warn loudly.
     """
     import warnings
 
     from pyspark.sql import Observation
 
+    spark = edges.sparkSession
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = sym.union(sym.select("v", "u"))  # unions are positional
     sym = sym.localCheckpoint(eager=True)  # reused every round
-    # Round 1 directly from the edge list (r9): initial labels are
-    # lab(v) = v, so the first round's min over the closed
-    # neighborhood — min(u, min_{v∈N(u)} lab(v)) — is just
-    # min(u, min N(u)): the sym⋈labels join AND the labels-init
-    # distinct() exchange both drop out of the first (at 100 TB:
-    # largest) round.  Bit-identical labels by substitution; the
-    # duplicate (u, u) self rows collapse map-side in the partial min.
-    labels = (sym.select("u", F.col("v").alias("lab"))
-              .union(sym.select("u", F.col("u").alias("lab")))
-              .groupBy("u").agg(F.min("lab").alias("lab")))
-    obs0 = Observation()
-    labels = (labels.observe(obs0, F.sum(F.col("lab")
-                                         .cast("decimal(38,0)")).alias("s"))
-              .localCheckpoint(eager=True))
-    prev_sum = obs0.get["s"]
-    # NULL sum ⇔ zero label rows ⇔ no edges: already at the fixpoint
-    converged = prev_sum is None
-    compress_after = 3   # shallow clique graphs converge before this
-    for i in range(1, max_iter if not converged else 1):
-        # Plain (uncompressed) rounds — the common case, dense-clique
-        # graphs never leave it — use one join + one union-groupBy
-        # (r9): the join → groupBy → left-join-back shape paid a
-        # third exchange and an extra AQE stage per round for the
-        # SAME min — min(lab(u), min over neighbors lab(v)) — because
-        # unioning the node's own label row into the aggregate
-        # replaces the left join (nodes with no in-edges keep their
-        # label through the union row, exactly like the old
-        # coalesce).  Map-side partial aggregation combines the raw
-        # (u, nbr-lab) rows before the shuffle, so bytes shuffled do
-        # not grow.  Labels are bit-identical (min is min; measured
-        # 2.2 s → 1.0 s for the 3-round bench fixture, same sums).
-        # COMPRESSED rounds keep the join form: Spark 4.1's
-        # DeduplicateRelations throws `key not found: u#N` when the
-        # compression self-join duplicates a union subtree UNDER a
-        # CollectMetrics observe (reproduced minimally; fine without
-        # the observe) — the join form sidesteps the analyzer bug and
-        # both forms produce identical labels.
-        if i < compress_after:
-            nbr = (sym.alias("e")
-                   .join(labels.alias("l"), F.col("e.v") == F.col("l.u"))
-                   .select(F.col("e.u").alias("u"),
-                           F.col("l.lab").alias("lab")))
-            prop = (nbr.union(labels.select("u", "lab"))
-                    .groupBy("u").agg(F.min("lab").alias("lab")))
+    labels = None
+    prev_sum = None
+    for _ in range(max_iter):
+        if labels is None:
+            prop = sym.groupBy("u").agg(F.min(F.least("u", "v")).alias("lab"))
         else:
-            nbr_min = (sym.alias("e")
-                       .join(labels.alias("l"),
-                             F.col("e.v") == F.col("l.u"))
-                       .groupBy(F.col("e.u").alias("u"))
-                       .agg(F.min("l.lab").alias("nbr_lab")))
-            prop = (labels.alias("l")
-                    .join(nbr_min.alias("n"), "u", "left")
-                    .select(F.col("u"),
-                            F.least(F.col("l.lab"),
-                                    F.coalesce(F.col("n.nbr_lab"),
-                                               F.col("l.lab")))
-                            .alias("lab")))
-        if i >= compress_after:
-            # path compression: lab ← lab(lab) — one extra self-join
-            # per round makes deep components converge geometrically
-            # (see docstring).  Adaptive: dense-clique graphs converge
-            # in ≤3 plain rounds and never pay the join; a graph still
-            # moving by round 3 has depth, and compression flips the
-            # remaining rounds from linear to logarithmic.  `left`
-            # keeps root labels (no row on the right) intact.
-            prop = (prop.alias("a")
-                    .join(prop.select(F.col("u").alias("cu"),
-                                      F.col("lab").alias("clab"))
-                          .alias("b"),
-                          F.col("a.lab") == F.col("b.cu"), "left")
-                    .select(F.col("a.u").alias("u"),
-                            F.least(F.col("a.lab"),
-                                    F.coalesce(F.col("b.clab"),
-                                               F.col("a.lab")))
-                            .alias("lab")))
+            # per edge (u, v): a.lab = lab(v), b.lab = g(v), c.lab =
+            # lab(u); unprojected, the three lookups share one exchange
+            prop = (sym.alias("e")
+                    .join(labels.alias("a"), F.col("e.v") == F.col("a.u"))
+                    .join(labels.alias("b"), F.col("a.lab") == F.col("b.u"))
+                    .join(labels.alias("c"), F.col("e.u") == F.col("c.u"))
+                    .selectExpr("inline(array("
+                                "named_struct('u', e.u, 'g', b.lab), "
+                                "named_struct('u', c.lab, 'g', b.lab), "
+                                "named_struct('u', e.u, 'g', c.lab)))")
+                    .groupBy("u").agg(F.min("g").alias("lab")))
         obs = Observation()
-        labels = (prop.observe(obs,
-                               F.sum(F.col("lab").cast("decimal(38,0)"))
+        labels = (prop.observe(obs, F.sum(F.col("lab").cast("decimal(38,0)"))
                                .alias("s"))
                   .localCheckpoint(eager=True))
-        # labels are monotone non-increasing → unchanged sum ⟺ fixpoint
+        jdf = labels._jdf
+        if jdf.queryExecution().optimizedPlan().stats().sizeInBytes() \
+                .bit_length() > 63:
+            labels = DataFrame(spark._jsparkSession.createDataFrame(
+                jdf.rdd(), jdf.schema()), spark)
+        # labels only decrease, so an unchanged sum is the fixpoint;
+        # a NULL sum means no edges
         cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
+        if cur_sum is None or cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-        if i + 1 >= escalate_after and i + 1 < max_iter:
-            # still moving after escalate_after rounds: deep graph —
-            # contract to the label graph and finish in O(log n)
-            # alternating-star rounds (see docstring)
-            lu = labels.select(F.col("u"), F.col("lab").alias("lu"))
-            lv = labels.select(F.col("u").alias("v"),
-                               F.col("lab").alias("lv"))
-            contracted = (sym.join(lu, "u").join(lv, "v")
-                          .select(F.col("lu").alias("id_a"),
-                                  F.col("lv").alias("id_b"))
-                          .filter(F.col("id_a") != F.col("id_b"))
-                          .distinct())
-            comp = connected_components_two_phase(contracted)
-            return (labels.join(
-                comp.select(F.col("doc_id").alias("lab"),
-                            F.col("component")), "lab", "left")
-                .select(F.col("u").alias("doc_id"),
-                        F.coalesce(F.col("component"), F.col("lab"))
-                        .alias("component")))
-    if not converged:
+    else:
         warnings.warn(
             f"connected_components exhausted max_iter={max_iter} "
-            "without reaching the label fixpoint — returned labels "
-            "are upper bounds, NOT components; raise max_iter or "
-            "lower escalate_after", RuntimeWarning, stacklevel=2)
+            "without reaching the label fixpoint: returned labels "
+            "are upper bounds, NOT components; raise max_iter",
+            RuntimeWarning, stacklevel=2)
     return labels.select(F.col("u").alias("doc_id"),
                          F.col("lab").alias("component"))
 
@@ -1304,7 +1147,7 @@ def canonical_selection(docs: DataFrame, pairs: DataFrame,
     shuffles."""
     from pyspark.sql import Window
 
-    comp = connected_components(pairs, max_iter=50)
+    comp = connected_components(pairs)
     members = (docs.select(F.col(id_col), F.col(quality_col))
                .join(F.broadcast(comp), id_col))
     w = Window.partitionBy("component").orderBy(

@@ -428,38 +428,6 @@ def materialize_cols(df: DataFrame, **cols: Column) -> DataFrame:
     return out.drop("__m")
 
 
-def _max_equal_run(arr: Column) -> Column:
-    """Count of the most frequent element (mode count): sort, then fold
-    tracking the longest equal-run.  Per-row fold, no shuffle — at
-    scale this replaces an explode + two hash-aggregates."""
-    init = F.struct(F.lit("").alias("prev"),
-                    F.lit(0).cast("long").alias("run"),
-                    F.lit(0).cast("long").alias("best"))
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1) \
-            .otherwise(F.lit(1).cast("long"))
-        return F.struct(x.alias("prev"), run.alias("run"),
-                        F.greatest(acc["best"], run).alias("best"))
-
-    return F.aggregate(F.array_sort(arr), init, step, lambda a: a["best"])
-
-
-def top_ngram_frac(text: Column, n: int) -> Column:
-    """Fraction of the document's word n-grams taken up by the single
-    most frequent n-gram (0 when the doc has fewer than n tokens).
-
-    Column-level convenience (per-row fold; interpreted).  For bulk
-    scoring use repetition_signals — its explode + hash-aggregate plan
-    is ~11× faster at sf0.1 because every step stays in whole-stage
-    codegen, while aggregate()-lambdas run interpreted per element."""
-    grams = word_ngrams(tokens(text), n)
-    total = F.size(grams).cast("double")
-    return F.when(total > 0,
-                  F.round(_max_equal_run(grams) / total, 6)) \
-        .otherwise(F.lit(0.0))
-
-
 def repetition_signals(df: DataFrame, text: str = "text",
                        id_col: str = "doc_id",
                        arrow_kernel: bool = True) -> DataFrame:

@@ -557,10 +557,6 @@ def _encode_value(num: int, t: str, v, scope: str,
 
 # ---------------------------------------------------------------- json
 
-def _to_json_value(v, use_json_names: bool, fields_by_name: dict):
-    return v
-
-
 def message_to_json(buf: bytes, msg: str, reg: ProtoRegistry) -> str:
     """Decoded message → proto3-JSON text: camelCase names, 64-bit
     ints as strings, zero values present (they were on the wire)."""

@@ -43,31 +43,3 @@ def avro_to_struct(col: Column, json_schema: str) -> Column:
                        "avro decode", "spark-avro_2.13")
     from pyspark.sql.avro.functions import from_avro
     return from_avro(col, json_schema)
-
-
-def struct_to_avro(col: Column) -> Column:
-    """`avro` op=from_json equivalent: struct → binary avro."""
-    _require_jvm_class("org.apache.spark.sql.avro.CatalystDataToAvro",
-                       "avro encode", "spark-avro_2.13")
-    from pyspark.sql.avro.functions import to_avro
-    return to_avro(col)
-
-
-def protobuf_to_struct(col: Column, message_name: str,
-                       desc_file_path: str) -> Column:
-    """`protobuf` op=to_json equivalent."""
-    _require_jvm_class(
-        "org.apache.spark.sql.protobuf.ProtobufDataToCatalyst",
-        "protobuf decode", "spark-protobuf_2.13")
-    from pyspark.sql.protobuf.functions import from_protobuf
-    return from_protobuf(col, message_name, desc_file_path)
-
-
-def struct_to_protobuf(col: Column, message_name: str,
-                       desc_file_path: str) -> Column:
-    """`protobuf` op=from_json equivalent."""
-    _require_jvm_class(
-        "org.apache.spark.sql.protobuf.CatalystDataToProtobuf",
-        "protobuf encode", "spark-protobuf_2.13")
-    from pyspark.sql.protobuf.functions import to_protobuf
-    return to_protobuf(col, message_name, desc_file_path)

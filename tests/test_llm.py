@@ -190,15 +190,17 @@ def test_pii_scrub_redacts_all_categories(spark):
 def test_connected_components_chain_and_clique(spark):
     from benthos_spark.llm.dedup import connected_components
     # chain 1-2-3-4-5 (diameter 4, worst case for label propagation),
-    # clique {10,11,12}, isolated edge 20-21
+    # clique {10,11,12}, isolated edge 20-21 given twice, and node 30
+    # whose only edge is a self-loop
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5),
          (10, 11), (11, 12), (10, 12),
-         (20, 21)], "id_a LONG, id_b LONG")
-    got = {r.doc_id: r.component
-           for r in connected_components(edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-                   10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+         (20, 21), (21, 20), (30, 30)], "id_a LONG, id_b LONG")
+    got = [(r.doc_id, r.component)
+           for r in connected_components(edges).collect()]
+    assert len(got) == 11
+    assert dict(got) == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
+                         10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30}
 
 
 def test_connected_components_iteration_cap(spark):
@@ -633,41 +635,54 @@ def test_langid_model_contract(spark):
     assert got[3] == "en"
 
 
-def test_connected_components_two_phase_matches_and_beats_diameter(spark):
-    """Large-star/small-star (Kiveris et al. 2014): equivalent labels
-    on general graphs, and O(log n) rounds where label propagation
-    needs diameter rounds — a 200-edge chain resolves to ONE component
-    within 12 alternations while 50 label-prop rounds cannot."""
+def test_connected_components_log_rounds_on_deep_graphs(spark):
+    """Hooking and shortcutting resolve deep graphs in O(log n) rounds
+    whatever the id order: a 2 000-node path with shuffled ids (linear
+    rounds for min-label propagation even with compression) and a
+    random tree each give ONE component labelled by the min id, in at
+    most 1 + 2*ceil(log2 n) jobs with AQE off (the edge checkpoint,
+    then one job per round).  The returned frame's size estimate must
+    not carry the per-round compounding of join estimates (at most 64
+    bits: Spark's unknown-size default is 63)."""
+    import math
     import random
 
-    from benthos_spark.llm.dedup import (connected_components,
-                                         connected_components_two_phase)
+    from benthos_spark.llm.dedup import connected_components
 
-    random.seed(7)
-    pairs = [(i, j) for i in range(10) for j in range(i + 1, 10)]
-    pairs += [(100 + i, 100 + (i + 1) % 15) for i in range(15)]
-    pairs += [(500, 501)]
-    random.shuffle(pairs)
-    e = spark.createDataFrame(pairs, "id_a long, id_b long")
-    lp = {(r.doc_id, r.component)
-          for r in connected_components(e).collect()}
-    tp = {(r.doc_id, r.component)
-          for r in connected_components_two_phase(e).collect()}
-    assert lp == tp and len({c for _, c in tp}) == 3
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(200)],
-                                  "id_a long, id_b long")
-    got = connected_components_two_phase(chain, max_iter=12).collect()
-    assert {r.component for r in got} == {0}
-    assert len(got) == 201
+    rnd = random.Random(7)
+    n = 2000
+    ids = list(range(n))
+    rnd.shuffle(ids)
+    path = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    tree = [(ids[i], ids[rnd.randrange(i)]) for i in range(1, n)]
+    sc = spark.sparkContext
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, edges in (("path", path), ("tree", tree)):
+            df = spark.createDataFrame(edges, "id_a long, id_b long")
+            group = f"cc_log_rounds_{name}"
+            sc.setJobGroup(group, "cc rounds on a deep graph")
+            cc = connected_components(df)
+            sc.setJobGroup(None, None)
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            got = cc.collect()
+            assert len(got) == n and {r.component for r in got} == {0}, name
+            assert n_jobs <= 1 + 2 * math.ceil(math.log2(n)), (name, n_jobs)
+            bits = (cc._jdf.queryExecution().optimizedPlan().stats()
+                    .sizeInBytes().bit_length())
+            assert bits <= 64, (name, bits)
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def test_connected_components_compression_solves_deep_chains(spark):
-    """r6 regression pin for adaptive path compression: a 120-node
-    path needs 120 plain label-prop rounds (> max_iter=50 would
-    return WRONG labels without compression); with lab←lab(lab)
-    kicking in after round 3 the label horizon grows geometrically
-    and the chain resolves to one component well inside the cap."""
+    """r6 regression pin for path compression: a 120-node path needs
+    120 plain label-prop rounds (> max_iter=50 would return WRONG
+    labels without compression); with every label read two hops up,
+    lab(lab(v)), the label horizon grows geometrically and the chain
+    resolves to one component well inside the cap."""
     from benthos_spark.llm.dedup import connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(120)],
@@ -677,34 +692,10 @@ def test_connected_components_compression_solves_deep_chains(spark):
     assert len(got) == 121
 
 
-def test_connected_components_auto_escalates_to_two_phase(spark):
-    """r7: a graph still moving at round `escalate_after` switches
-    itself to the alternating-star rounds — no caller ever has to pick
-    connected_components_two_phase manually.  A 600-node path is far
-    past what compressed propagation finishes in the default cap
-    (observed ≈2 extra depth-hops/round → ~300 rounds), yet it must
-    resolve to ONE component with bit-identical min-id labels inside
-    max_iter=50.  escalate_after=6 keeps the test fast; the default
-    (20) only fires on shapes the bench fixtures never produce."""
-    import warnings
-
-    from benthos_spark.llm.dedup import connected_components
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(600)],
-                                  "id_a long, id_b long")
-    with warnings.catch_warnings():
-        # escalation must NOT trip the exhaustion warning
-        warnings.simplefilter("error", RuntimeWarning)
-        got = connected_components(chain, max_iter=50,
-                                   escalate_after=6).collect()
-    assert {r.component for r in got} == {0}
-    assert len(got) == 601
-
-
 def test_connected_components_warns_on_cap_exhaustion(spark):
     """ADVICE r6: falling off max_iter without the sum fixpoint used
-    to return possibly-wrong labels SILENTLY.  With escalation
-    disabled (escalate_after ≥ max_iter) the exhaustion must warn."""
+    to return possibly-wrong labels SILENTLY.  A 41-node path needs
+    more than 3 rounds, so the exhaustion must warn."""
     import warnings
 
     import pytest as _pytest
@@ -714,8 +705,7 @@ def test_connected_components_warns_on_cap_exhaustion(spark):
     chain = spark.createDataFrame([(i, i + 1) for i in range(40)],
                                   "id_a long, id_b long")
     with _pytest.warns(RuntimeWarning, match="exhausted max_iter"):
-        connected_components(chain, max_iter=3,
-                             escalate_after=99).collect()
+        connected_components(chain, max_iter=3).collect()
 
 
 def test_dsir_selects_target_like_docs(spark):

@@ -380,14 +380,14 @@ def test_fused_gram_counts_match_separate_tables(spark):
     assert bi_f == bi_ref
 
 
-# ---------------------------------------------------------------- CC round
-# shapes: union-groupBy rounds and compressed join rounds agree
+# ---------------------------------------------------------------- CC rounds
+# on a deep path, cliques and an isolated edge agree with min-id labels
 
 
 def test_cc_union_rounds_match_on_deep_graph(spark):
     from benthos_spark.llm.dedup import connected_components
 
-    # a long path (forces compressed rounds past compress_after=3)
+    # a long path (needs several hooking/shortcutting rounds)
     # plus two cliques and isolated self-edges
     edges = [(i, i + 1) for i in range(40)]
     edges += [(100, 101), (101, 102), (100, 102)]

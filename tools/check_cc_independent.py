@@ -28,7 +28,49 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+import numpy as np
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def expected_verdicts(a: np.ndarray, b: np.ndarray, doc_ids: np.ndarray,
+                      n_chars: np.ndarray) -> tuple[dict, dict]:
+    """Replay both queries off arrays: pair endpoints `a`/`b` and every
+    document's `doc_ids`/`n_chars`.  Returns ({node: component} over
+    the pair graph's nodes, {doc_id: (component, is_canonical)} over
+    all documents).  With no pairs the graph is empty and every
+    document is its own canonical singleton."""
+    # --- components: min-label propagation + pointer jumping ---
+    ids = np.unique(np.concatenate([a, b]))
+    ia = np.searchsorted(ids, a)
+    ib = np.searchsorted(ids, b)
+    lab = np.arange(len(ids), dtype=np.int64)
+    for _ in range(200):
+        old = lab.copy()
+        m = np.minimum(lab[ia], lab[ib])
+        np.minimum.at(lab, ia, m)
+        np.minimum.at(lab, ib, m)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+        if np.array_equal(old, lab):
+            break
+    comp = ids[lab]
+    expected_cc = dict(zip(ids.tolist(), comp.tolist()))
+
+    # --- canonical winner rule over ALL documents ---
+    in_graph = np.isin(doc_ids, ids)
+    comp_all = doc_ids.copy()
+    comp_all[in_graph] = comp[np.searchsorted(ids, doc_ids[in_graph])]
+    order = np.lexsort((doc_ids, -n_chars))  # n_chars DESC, doc_id ASC
+    _, first_pos = np.unique(comp_all[order], return_index=True)
+    is_canon = np.zeros(len(doc_ids), dtype=np.int64)
+    is_canon[order[first_pos]] = 1
+    expected_canon = {int(d): (int(c), int(k))
+                      for d, c, k in zip(doc_ids, comp_all, is_canon)}
+    return expected_cc, expected_canon
 
 
 def main() -> int:
@@ -36,7 +78,6 @@ def main() -> int:
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
     import duckdb
-    import numpy as np
 
     import __spark_entry__ as entry
 
@@ -66,41 +107,11 @@ def main() -> int:
           flush=True)
     nc = con.execute("SELECT doc_id, n_chars FROM documents").fetchnumpy()
 
-    # --- components: min-label propagation + pointer jumping ---
     t0 = time.time()
-    ids = np.unique(np.concatenate([a, b]))
-    ia = np.searchsorted(ids, a)
-    ib = np.searchsorted(ids, b)
-    lab = np.arange(len(ids), dtype=np.int64)
-    for _ in range(200):
-        old = lab.copy()
-        m = np.minimum(lab[ia], lab[ib])
-        np.minimum.at(lab, ia, m)
-        np.minimum.at(lab, ib, m)
-        while True:
-            nxt = lab[lab]
-            if np.array_equal(nxt, lab):
-                break
-            lab = nxt
-        if np.array_equal(old, lab):
-            break
-    comp = ids[lab]
-    print(f"components: {len(np.unique(lab))} over {len(ids)} nodes "
-          f"in {time.time()-t0:.1f} s", flush=True)
-    expected_cc = dict(zip(ids.tolist(), comp.tolist()))
-
-    # --- canonical winner rule over ALL documents ---
-    doc_ids = nc["doc_id"].astype(np.int64)
-    nch = nc["n_chars"].astype(np.int64)
-    pos = np.minimum(np.searchsorted(ids, doc_ids), len(ids) - 1)
-    in_graph = ids[pos] == doc_ids
-    comp_all = np.where(in_graph, comp[pos], doc_ids)
-    order = np.lexsort((doc_ids, -nch))  # n_chars DESC, doc_id ASC
-    _, first_pos = np.unique(comp_all[order], return_index=True)
-    is_canon = np.zeros(len(doc_ids), dtype=np.int64)
-    is_canon[order[first_pos]] = 1
-    expected_canon = {int(d): (int(c), int(k))
-                      for d, c, k in zip(doc_ids, comp_all, is_canon)}
+    expected_cc, expected_canon = expected_verdicts(
+        a, b, nc["doc_id"].astype(np.int64), nc["n_chars"].astype(np.int64))
+    print(f"components: {len(set(expected_cc.values()))} over "
+          f"{len(expected_cc)} nodes in {time.time()-t0:.1f} s", flush=True)
 
     # --- Spark side, exact comparison ---
     from benthos_spark.session import get_spark
