@@ -677,6 +677,68 @@ def test_connected_components_log_rounds_on_deep_graphs(spark):
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
+def test_connected_components_two_phase_matches_and_beats_diameter(spark):
+    """The one min-label algorithm keeps what the large-star/small-star
+    rounds it replaced were for: labels equal to a union-find reference
+    (min id per component) on a general graph of a clique, a ring and a
+    pair, and O(log n) rounds where plain label propagation needs
+    diameter rounds: a 200-edge chain resolves to ONE component within
+    12 rounds."""
+    import random
+    import warnings
+
+    from benthos_spark.llm.dedup import connected_components
+
+    random.seed(7)
+    pairs = [(i, j) for i in range(10) for j in range(i + 1, 10)]
+    pairs += [(100 + i, 100 + (i + 1) % 15) for i in range(15)]
+    pairs += [(500, 501)]
+    random.shuffle(pairs)
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {(v, find(v)) for v in parent}
+    e = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {(r.doc_id, r.component)
+           for r in connected_components(e).collect()}
+    assert got == want and len({c for _, c in got}) == 3
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(200)],
+                                  "id_a long, id_b long")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        got = connected_components(chain, max_iter=12).collect()
+    assert {r.component for r in got} == {0}
+    assert len(got) == 201
+
+
+def test_connected_components_auto_escalates_to_two_phase(spark):
+    """No caller ever picks a second algorithm for deep graphs: a
+    600-node path, far past what compressed label propagation finished
+    in the cap (~300 rounds), must resolve to ONE component with min-id
+    labels inside max_iter=50 without the exhaustion warning."""
+    import warnings
+
+    from benthos_spark.llm.dedup import connected_components
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(600)],
+                                  "id_a long, id_b long")
+    with warnings.catch_warnings():
+        # a deep path must NOT trip the exhaustion warning
+        warnings.simplefilter("error", RuntimeWarning)
+        got = connected_components(chain, max_iter=50).collect()
+    assert {r.component for r in got} == {0}
+    assert len(got) == 601
+
+
 def test_connected_components_compression_solves_deep_chains(spark):
     """r6 regression pin for path compression: a 120-node path needs
     120 plain label-prop rounds (> max_iter=50 would return WRONG
